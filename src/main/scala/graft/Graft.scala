@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * the reference's analytics-shell bootstrap (spark.sh:17-27 mounts
   * connectors and hand-configures a PySpark shell; a graft user calls
   * `Graft.init(spark, dir)`): registers the engine's custom SQL functions
-  * (`vec_dot`, `vec_cos`, `vec_l2sq`, `minhash_sig`, `simhash_sig`,
-  * `bloom_filter_agg`, `might_contain`) and
+  * ([[functions.SqlFunctions.all]]: `vec_dot`, `vec_cos`, `vec_l2sq`,
+  * `minhash_sig`, `simhash_sig`, `bloom_filter_agg`, `might_contain`) and
   * mounts the standard tables as
   * temp views so `spark.sql(...)` works immediately. Cluster deployments
   * can instead inject the functions with
@@ -20,10 +20,7 @@ object Graft {
 
   /** Register functions + mount `dir`'s parquet tables as temp views. */
   def init(spark: SparkSession, dir: String): Unit = {
-    functions.VectorExpressions.register(spark)
-    functions.MinHash.register(spark)
-    functions.SimHash.register(spark)
-    functions.Sketches.register(spark)
+    functions.SqlFunctions.setup(spark)
     tableNames.foreach(t =>
       Tables.load(spark, dir, t).createOrReplaceTempView(t))
     // events carries nanosecond timestamps — only readable via its loader

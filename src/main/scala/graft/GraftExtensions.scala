@@ -1,67 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import graft.functions.{FloatVectorCosine, FloatVectorDot, FloatVectorL2, MinHashSignature, SimHashSignature}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session-extension hook so the engine's custom expressions are available
-  * in any session started with
-  * `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (or `.withExtensions(new GraftExtensions)`): the injection path for
-  * clusters where code can't call
-  * [[functions.VectorExpressions.register]] per session.
+/** Session-extension hook so the engine's custom SQL functions
+  * ([[functions.SqlFunctions.all]]) are available in any session started
+  * with `--conf spark.sql.extensions=graft.GraftExtensions` (or
+  * `.withExtensions(new GraftExtensions)`): the injection path for
+  * clusters where code can't call [[functions.SqlFunctions.setup]] per
+  * session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FloatVectorDot].getName, "vec_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVectorDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_cos"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FloatVectorCosine].getName, "vec_cos"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVectorCosine(exprs(0), exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_l2sq"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FloatVectorL2].getName, "vec_l2sq"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVectorL2(exprs(0), exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinHashSignature].getName, "minhash_sig"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.MinHash.builder(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_sig"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SimHashSignature].getName, "simhash_sig"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.SimHash.builder(exprs)))
-    // bloom sketch pair (Spark-internal expressions surfaced as SQL —
-    // see graft.functions.Sketches for the builders + usage contract)
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_filter_agg"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        exprs match {
-          case Seq(c) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
-          case Seq(c, n) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
-          case Seq(c, n, m) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n, m)
-          case _ => throw new IllegalArgumentException("bloom_filter_agg takes 1 to 3 arguments")
-        }))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("might_contain"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    functions.SqlFunctions.all.foreach { case (name, cls, builder) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
 }

@@ -863,7 +863,7 @@ object Dedup {
     * output is row-identical to d11 — same oracle, by construction. */
   def d28BloomContamination(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Sketches.register(spark)
+    graft.functions.SqlFunctions.setup(spark)
     val docs = Tables.documents(spark, dir)
     val bench = shingles(docs.filter($"doc_id" % 97 === 0))
       .select($"shingle").distinct()
@@ -1566,10 +1566,6 @@ object Dedup {
   private def probeIndex(spark: SparkSession, b: DataFrame, sharrIdx: DataFrame,
                          bandsIdx: DataFrame, idxHash: DataFrame): DataFrame = {
     import spark.implicits._
-    // the micro-batch runs in a CLONED session whose function registry
-    // predates minhash_sig's lazy registration
-    graft.functions.MinHash.register(b.sparkSession)
-    graft.functions.MinHash.register(spark)
     val sharrB = shingleArrays(b).filter(size($"shingles") > 0)
     val sigB = sharrB.select($"doc_id",
       graft.functions.MinHash.minhashSig($"shingles", K, P).as("sig"))

@@ -100,11 +100,10 @@ case class MinHashSignature(child: Expression, k: Int, p: Long)
 }
 
 object MinHash {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.{call_function, lit}
+  import org.apache.spark.sql.{Column, GraftColumn}
 
-  /** The one `minhash_sig(shingles, k, p)` function builder, shared by
-    * [[register]] and [[graft.GraftExtensions]]: k and p must be foldable
+  /** The one `minhash_sig(shingles, k, p)` SQL function builder
+    * ([[SqlFunctions]]): k and p must be foldable
     * integral literals — a column reference or a null/fractional literal
     * gets a clear analysis-time error instead of the opaque
     * unbound-reference / MatchError an unconditional `eval()` would
@@ -130,18 +129,7 @@ object MinHash {
     MinHashSignature(exprs(0), intArg(exprs(1), "k").toInt, intArg(exprs(2), "p"))
   }
 
-  /** Register `minhash_sig(shingles, k, p)` in the session's function
-    * registry (same Column↔Expression bridge as vec_dot: the direct
-    * constructor is private[sql] in Spark 4). k and p must be literals. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_sig", builder, "built-in")
-
-  /** Column API for [[MinHashSignature]]. */
-  def minhashSig(shingles: Column, k: Int, p: Long): Column = {
-    register(SparkSession.active)
-    call_function("minhash_sig", shingles, lit(k), lit(p))
-  }
+  /** Column API for [[MinHashSignature]] (see [[GraftColumn]]). */
+  def minhashSig(shingles: Column, k: Int, p: Long): Column =
+    GraftColumn(MinHashSignature(GraftColumn.expr(shingles), k, p))
 }

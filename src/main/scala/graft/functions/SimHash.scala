@@ -116,11 +116,10 @@ case class SimHashSignature(child: Expression, bits: Int, p: Long)
 }
 
 object SimHash {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.{call_function, lit}
+  import org.apache.spark.sql.{Column, GraftColumn}
 
-  /** The one `simhash_sig(shingles, bits, p)` function builder (shared by
-    * [[register]] and [[graft.GraftExtensions]]); bits and p must be
+  /** The one `simhash_sig(shingles, bits, p)` SQL function builder
+    * ([[SqlFunctions]]); bits and p must be
     * foldable integral literals — same guard contract as
     * [[MinHash.builder]]. */
   def builder(exprs: Seq[Expression]): Expression = {
@@ -144,17 +143,7 @@ object SimHash {
     SimHashSignature(exprs(0), intArg(exprs(1), "bits").toInt, intArg(exprs(2), "p"))
   }
 
-  /** Register `simhash_sig` in the session's function registry (skips
-    * when already present — see VectorExpressions.register, r20). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_sig")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash_sig", builder, "built-in")
-
-  /** Column API for [[SimHashSignature]]. */
-  def simhashSig(shingles: Column, bits: Int, p: Long): Column = {
-    register(SparkSession.active)
-    call_function("simhash_sig", shingles, lit(bits), lit(p))
-  }
+  /** Column API for [[SimHashSignature]] (see [[GraftColumn]]). */
+  def simhashSig(shingles: Column, bits: Int, p: Long): Column =
+    GraftColumn(SimHashSignature(GraftColumn.expr(shingles), bits, p))
 }

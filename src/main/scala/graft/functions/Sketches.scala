@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -8,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   *
   * `BloomFilterAggregate` / `BloomFilterMightContain` are the codegen'd
   * expressions behind Spark's runtime row-level filtering, but they are
-  * not exposed in the public FunctionRegistry — this registers them as
+  * not exposed in the public FunctionRegistry — [[SqlFunctions]]
+  * registers these builders as
   * `bloom_filter_agg(xxhash64(col)[, est_items[, num_bits]])` and
   * `might_contain(bloom, xxhash64(col))` so membership sketches are a
   * first-class library feature (contamination gates, semi-join
@@ -20,7 +20,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object Sketches {
 
-  private def bloomAggBuilder(exprs: Seq[Expression]): Expression =
+  private[functions] def bloomAggBuilder(exprs: Seq[Expression]): Expression =
     exprs match {
       case Seq(c)       => new BloomFilterAggregate(c)
       case Seq(c, n)    => new BloomFilterAggregate(c, n)
@@ -29,23 +29,10 @@ object Sketches {
         "bloom_filter_agg takes 1 to 3 arguments")
     }
 
-  private def mightContainBuilder(exprs: Seq[Expression]): Expression =
+  private[functions] def mightContainBuilder(exprs: Seq[Expression]): Expression =
     exprs match {
       case Seq(b, v) => BloomFilterMightContain(b, v)
       case _ => throw new IllegalArgumentException(
         "might_contain takes exactly 2 arguments")
     }
-
-  /** Register both functions in a session's registry (skips when
-    * already present — see VectorExpressions.register, r20). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_filter_agg"))) {
-      reg.createOrReplaceTempFunction(
-        "bloom_filter_agg", bloomAggBuilder, "built-in")
-      reg.createOrReplaceTempFunction(
-        "might_contain", mightContainBuilder, "built-in")
-    }
-  }
 }

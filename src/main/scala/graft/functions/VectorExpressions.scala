@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Codegen'd dot product over two `array<float>` columns.
@@ -198,42 +197,16 @@ case class FloatVectorL2(left: Expression, right: Expression)
 
 object VectorExpressions {
 
-  /** Register `vec_dot` + `vec_cos` in a session's function registry.
-    * Skips when already present (r20): the Column APIs register on
-    * EVERY call, so a 293-entry bench session re-registered (and
-    * warn-logged) hundreds of times for three map puts that never
-    * change — the builders are stable objects, so first-wins is
-    * identical to last-wins here. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"))) {
-      reg.createOrReplaceTempFunction(
-        "vec_dot", exprs => FloatVectorDot(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "vec_cos", exprs => FloatVectorCosine(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "vec_l2sq", exprs => FloatVectorL2(exprs(0), exprs(1)), "built-in")
-    }
-  }
-
-  /** Column API for [[FloatVectorDot]]: resolved through the function
-    * registry of the active session (the Column↔Expression bridge is
-    * private[sql] in Spark 4). */
-  def vecDot(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function("vec_dot", a, b)
-  }
+  /** Column API for [[FloatVectorDot]]: the expression itself, bound to
+    * no session's registry ([[GraftColumn]]). */
+  def vecDot(a: Column, b: Column): Column =
+    GraftColumn(FloatVectorDot(GraftColumn.expr(a), GraftColumn.expr(b)))
 
   /** Column API for [[FloatVectorCosine]]. */
-  def vecCos(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function("vec_cos", a, b)
-  }
+  def vecCos(a: Column, b: Column): Column =
+    GraftColumn(FloatVectorCosine(GraftColumn.expr(a), GraftColumn.expr(b)))
 
   /** Column API for [[FloatVectorL2]]. */
-  def vecL2(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function("vec_l2sq", a, b)
-  }
+  def vecL2(a: Column, b: Column): Column =
+    GraftColumn(FloatVectorL2(GraftColumn.expr(a), GraftColumn.expr(b)))
 }

@@ -19,7 +19,7 @@ import scala.jdk.CollectionConverters._
   *    references a final name until the manifest swap)
   *  - `list` → prefix listing (names only — callers never need handles)
   *
-  * Executor-side consumers (vector writers, payload decoders) reach the
+  * Executor-side consumers (vector writers, parquet decoders) reach the
   * binding through [[CommitSink.io]]; the trait is Serializable so a
   * future non-object binding can be shipped in task closures.
   *
@@ -28,14 +28,12 @@ import scala.jdk.CollectionConverters._
   * what keeps "manifest-defines-the-table on non-transactional object
   * stores" an implementation away rather than a redesign. */
 private[graft] trait CommitIO extends Serializable {
-  // parquet-java file handles (payload encode/decode)
+  // parquet-java file handles (staged-file encode/decode)
   def inputFile(p: Path): org.apache.parquet.io.InputFile
   def outputFile(p: Path): org.apache.parquet.io.OutputFile
-  // byte/char streams (vectors, json payload)
+  // byte streams (vectors, bloom sidecars)
   def newInputStream(p: Path): java.io.InputStream
   def newOutputStream(p: Path): java.io.OutputStream
-  def newBufferedReader(p: Path): java.io.BufferedReader
-  def newBufferedWriter(p: Path): java.io.BufferedWriter
   // whole-object text (manifests)
   def readString(p: Path): String
   def writeString(p: Path, s: String): Unit
@@ -67,10 +65,6 @@ private[graft] object NioCommitIO extends CommitIO {
     Files.newInputStream(p)
   override def newOutputStream(p: Path): java.io.OutputStream =
     Files.newOutputStream(p)
-  override def newBufferedReader(p: Path): java.io.BufferedReader =
-    Files.newBufferedReader(p)
-  override def newBufferedWriter(p: Path): java.io.BufferedWriter =
-    Files.newBufferedWriter(p)
   override def readString(p: Path): String = Files.readString(p)
   override def writeString(p: Path, s: String): Unit = {
     Files.writeString(p, s); ()
@@ -178,12 +172,6 @@ private[graft] class HadoopCommitIO extends CommitIO {
   override def newInputStream(p: Path): java.io.InputStream = fs.open(hp(p))
   override def newOutputStream(p: Path): java.io.OutputStream =
     fs.create(hp(p), true)
-  override def newBufferedReader(p: Path): java.io.BufferedReader =
-    new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(hp(p)), java.nio.charset.StandardCharsets.UTF_8))
-  override def newBufferedWriter(p: Path): java.io.BufferedWriter =
-    new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      fs.create(hp(p), true), java.nio.charset.StandardCharsets.UTF_8))
   override def readString(p: Path): String = {
     val in = fs.open(hp(p))
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)

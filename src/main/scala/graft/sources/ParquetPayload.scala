@@ -13,20 +13,16 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The PARQUET staged-file payload of the commit sink — the at-scale
-  * encoder the JSON-lines fixture format (CommitSink's original payload,
-  * kept behind `option("payload", "json")`) documented as its own
-  * replacement: columnar chunks with dictionary/RLE encodings and
-  * snappy compression, column projection that skips whole chunks
-  * instead of scanning text, and the full declared-type surface the CDC
-  * path produces — TIMESTAMP / TIMESTAMP_NTZ (INT64 micros, the
-  * adjustedToUTC flag distinguishing them), DATE (INT32 days), DECIMAL
-  * (INT64 unscaled for p ≤ 18, 16-byte fixed for wider), FLOAT,
-  * SMALLINT/TINYINT (INT32 with bit-width annotation) — none of which
-  * a portable JSON text line can carry without private conventions.
+/** The staged-file format of the commit sink: parquet, with columnar
+  * chunks under dictionary/RLE encodings and snappy compression, column
+  * projection that skips whole chunks, and the full declared-type
+  * surface the CDC path produces — TIMESTAMP / TIMESTAMP_NTZ (INT64
+  * micros, the adjustedToUTC flag distinguishing them), DATE (INT32
+  * days), DECIMAL (INT64 unscaled for p ≤ 18, 16-byte fixed for
+  * wider), FLOAT, SMALLINT/TINYINT (INT32 with bit-width annotation).
   * The reference's sink models a ClickHouse DDL with real
   * Date/DateTime/Decimal columns (consumer_to_file.py:145-150); this is
-  * the payload that lets the graft-commit table hold them.
+  * the format that lets the graft-commit table hold them.
   *
   * ENCODE (r20) streams InternalRows straight into parquet-java's page
   * writers through a custom [[InternalRowWriteSupport]] — no per-row
@@ -42,8 +38,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[graft] object ParquetPayload {
 
-  /** Spark types the parquet payload accepts — the JSON payload's
-    * portable scalar set plus the declared-schema (TYPE_MAPPING) types. */
+  /** Spark types the staged files accept — the portable scalar set plus
+    * the declared-schema (TYPE_MAPPING) types. */
   def supported(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | StringType | BooleanType => true
     case FloatType | ShortType | ByteType | DateType => true
@@ -52,8 +48,7 @@ private[graft] object ParquetPayload {
     case _ => false
   }
 
-  /** All fields optional: SQL-nullable, like the JSON payload's
-    * omitted-key convention. */
+  /** All fields optional: SQL-nullable. */
   private def toParquetField(f: StructField): Type = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA}
     val b = f.dataType match {
@@ -175,9 +170,8 @@ private[graft] object ParquetPayload {
         : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] = support
   }
 
-  /** InternalRow writer over `file` — same codec/layout decisions as
-    * [[writer]]; returns the support so the caller can set the resolved
-    * marker offset. */
+  /** Snappy-compressed InternalRow writer over `file`; returns the
+    * support so the caller can set the resolved marker offset. */
   def rowWriter(file: NioPath, msg: MessageType, schema: StructType)
       : (ParquetWriter[InternalRow], InternalRowWriteSupport) = {
     val support = new InternalRowWriteSupport(msg, schema)
@@ -201,8 +195,7 @@ private[graft] object ParquetPayload {
 
   /** Streaming decoder over one parquet file with COLUMN PROJECTION:
     * only `wanted`'s fields are materialized — unrequested column
-    * chunks are never read off disk (the columnar contract the JSON
-    * payload could only approximate by skipping chars). Fields in
+    * chunks are never read off disk. Fields in
     * `wanted` absent from the file decode as null.
     *
     * r20: values assemble DIRECTLY into a reused per-row array in their

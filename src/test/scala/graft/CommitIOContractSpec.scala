@@ -3,15 +3,19 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import sources.{CommitIO, CommitSink, HadoopCommitIO, NioCommitIO}
+import sources.{CommitIO, CommitSink, HadoopCommitIO, NioCommitIO, ParquetPayload}
 
 /** The [[CommitIO]] contract, property-tested against BOTH bindings —
   * the r15 proof that the storage seam has one behavior regardless of
   * implementation. Every test runs once per binding:
   *
-  *  - whole-object text and stream roundtrips, list-after-put (a name
+  *  - whole-object text, byte-stream and parquet (`outputFile` →
+  *    `inputFile`, the staged-file path) roundtrips, list-after-put (a name
   *    written is a name listed — the manifest GC's liveness sweeps
   *    reason over exactly this), size/exists/isDirectory agreement;
   *  - `promote` is rename-NO-CLOBBER: the staged→final move refuses an
@@ -57,13 +61,27 @@ class CommitIOContractSpec extends AnyFunSuite {
       val in = io.newInputStream(d.resolve("v.bin"))
       val got = try in.readAllBytes() finally in.close()
       assert(java.util.Arrays.equals(got, bytes))
-      // buffered reader/writer roundtrip (the json payload path)
-      val w = io.newBufferedWriter(d.resolve("j.json"))
-      try { w.write("{\"k\":1}"); w.newLine(); w.write("{\"k\":2}") } finally w.close()
-      val r = io.newBufferedReader(d.resolve("j.json"))
-      val lines = try Iterator.continually(r.readLine()).takeWhile(_ != null).toList
-      finally r.close()
-      assert(lines == List("{\"k\":1}", "{\"k\":2}"))
+      // parquet roundtrip through this binding's outputFile/inputFile
+      // (the staged-file path: CommitDataWriter encodes, the scan decodes)
+      val schema = StructType.fromDDL("k BIGINT, s STRING")
+      val rows = Seq[Seq[Any]](Seq(1L, "a"), Seq(2L, null), Seq(null, "é中"))
+      val back = CommitSink.withIo(io) {
+        val (w, _) = ParquetPayload.rowWriter(d.resolve("p.parquet"),
+          ParquetPayload.message(schema), schema)
+        try rows.foreach(r => w.write(new GenericInternalRow(r.map {
+          case s: String => UTF8String.fromString(s)
+          case v => v
+        }.toArray)))
+        finally w.close()
+        val fr = new ParquetPayload.FileRows(d.resolve("p.parquet"), schema)
+        try Iterator.continually(fr.next()).takeWhile(identity).map(_ =>
+          fr.fieldIndex.toSeq.map(fr.values(_)).map {
+            case u: UTF8String => u.toString
+            case v => v
+          }).toList
+        finally fr.close()
+      }
+      assert(back == rows)
       // delete semantics: true when present, false when already gone
       assert(io.deleteIfExists(d.resolve("b.bin")))
       assert(!io.deleteIfExists(d.resolve("b.bin")))
@@ -76,7 +94,7 @@ class CommitIOContractSpec extends AnyFunSuite {
       }
       assert(io.deleteIfExists(d.resolve("sub").resolve("child")))
       assert(io.deleteIfExists(d.resolve("sub")), "empty dir deletes fine")
-      assert(io.list(d).toSet == Set("obj.txt", "v.bin", "j.json"))
+      assert(io.list(d).toSet == Set("obj.txt", "v.bin", "p.parquet"))
     }
 
     test(s"[$name] promote moves and refuses to clobber; atomicReplace replaces") {

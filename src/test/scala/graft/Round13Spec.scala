@@ -17,9 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - '''Parquet payload''': staged files default to columnar parquet;
   *    every declared type (timestamp/ntz, date, decimal narrow+wide,
   *    float, smallint, tinyint) round-trips bit-exactly through write →
-  *    commit → DSv2 scan AND the Spark-native re-read; payloads are
-  *    homogeneous per lineage (append mismatch refused; an un-optioned
-  *    truncate KEEPS the table's recorded choice).
+  *    commit → DSv2 scan AND the Spark-native re-read; a manifest
+  *    recording any other payload is refused, never read as parquet.
   *  - '''Group-filter guard''': the matching-groups subquery only runs
   *    when the manifest's zone maps show prunable structure — a
   *    hash-scattered layout skips it (rewrite = statically planned
@@ -97,7 +96,6 @@ class Round13Spec extends AnyFunSuite {
     val in = typedFixture
     in.write.format("graft-commit").option("path", dir).mode("overwrite").save()
     val m = manifest(dir)
-    assert(m.payload == "parquet", "parquet is the default payload")
     assert(m.files.forall(_.endsWith(".parquet")))
     // declared types survive in the manifest schema
     val sch = sources.CommitSink.readCommitted(spark, dir).schema
@@ -141,25 +139,33 @@ class Round13Spec extends AnyFunSuite {
     assert(desc.contains("columns: 2/4"), s"projection must reach the scan: $desc")
   }
 
-  test("parquet payload: appends carry the format; a json append onto parquet is refused") {
-    val dir = freshDir("payload_mismatch")
-    spark.range(5L).select($"id").write.format("graft-commit")
+  test("payload: a json-payload manifest is refused by read, append and compact") {
+    val dir = freshDir("payload_refused")
+    spark.range(10L).select($"id").write.format("graft-commit")
       .option("path", dir).mode("overwrite").save()
-    // un-optioned append joins the table's payload
-    spark.range(5L, 10L).select($"id").write.format("graft-commit")
-      .option("path", dir).mode("append").save()
-    assert(manifest(dir).payload == "parquet")
-    assert(sources.CommitSink.readCommitted(spark, dir).count() == 10L)
-    val e = intercept[Exception] {
-      spark.range(10L, 15L).select($"id").write.format("graft-commit")
-        .option("path", dir).option("payload", "json").mode("append").save()
+    val mf = Paths.get(dir, "_MANIFEST.json")
+    val txt = Files.readString(mf)
+    assert(txt.contains("\"payload\":\"parquet\""),
+      "the manifest format still records the staged-file payload")
+    def refusal(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).find(m => m != null && m.contains("records payload"))
+        .getOrElse(fail(s"no payload refusal in the cause chain of $e"))
+        .stripPrefix("requirement failed: ")
     }
-    assert(e.getMessage.contains("payload mismatch"), e.getMessage)
-    // a truncate MAY switch
-    spark.range(3L).select($"id").write.format("graft-commit")
-      .option("path", dir).option("payload", "json").mode("overwrite").save()
-    assert(manifest(dir).payload == "json")
-    assert(sources.CommitSink.readCommitted(spark, dir).count() == 3L)
+    val want = s"graft-commit: the table at $dir records payload 'json' — " +
+      "only parquet tables are readable; rewrite it as parquet with a " +
+      "release that still reads JSON-payload tables"
+    Files.writeString(mf, txt.replace("\"payload\":\"parquet\"", "\"payload\":\"json\""))
+    assert(refusal(spark.read.format("graft-commit").option("path", dir)
+      .load().count()) == want)
+    assert(refusal(spark.range(10L, 20L).select($"id").write.format("graft-commit")
+      .option("path", dir).mode("append").save()) == want)
+    assert(refusal(sources.CommitSink.compact(spark, dir, 1)) == want)
+    // a pre-payload manifest (no field) held JSON lines: refused the same way
+    Files.writeString(mf, txt.replace("\"payload\":\"parquet\",", ""))
+    assert(refusal(sources.CommitSink.readCommitted(spark, dir)) == want)
   }
 
   test("parquet payload: DML (UPDATE zone-prune + MERGE) runs group-granular over parquet files") {
@@ -300,7 +306,7 @@ class Round13Spec extends AnyFunSuite {
             (i * 10L).toString, (i * 10L + 9).toString))).encode
       }.toMap
       sources.CommitSink.writeManifest(Paths.get(path), "id BIGINT", files, 1L,
-        stats = stats, payload = "parquet")
+        stats = stats)
     }
     val small = freshDir("bigmanifest_1k")
     Files.createDirectories(Paths.get(small))
@@ -543,23 +549,6 @@ class Round13Spec extends AnyFunSuite {
     assert(sources.CommitSink.readCommitted(spark, path).count() == 980L)
   }
 
-  test("mor delete: json payload falls back to copy-on-write (same answer)") {
-    val (cat, root) = withCatalog("mor_json")
-    val path = s"$root/default/t"
-    spark.range(100L).select($"id").repartitionByRange(2, $"id")
-      .write.format("graft-commit").option("path", path)
-      .option("payload", "json").mode("overwrite").save()
-    val before = manifest(path)
-    withDeleteMode("merge-on-read") {
-      spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 10 AND id < 20")
-    }
-    val after = manifest(path)
-    assert(after.deletes.isEmpty, "json payload has no stable positions: COW fallback")
-    assert(after.files.intersect(before.files).size == 1,
-      "the fallback is still group-granular: one file rewritten, one carried")
-    assert(sources.CommitSink.readCommitted(spark, path).count() == 90L)
-  }
-
   // --- o28: delta-based (merge-on-read) UPDATE / MERGE ---------------------
 
   private def withRowLevelMode[A](mode: String)(body: => A): A = {
@@ -629,25 +618,6 @@ class Round13Spec extends AnyFunSuite {
     sources.CommitSink.compact(spark, morPath, 2)
     assert(manifest(morPath).deletes.isEmpty)
     assert(sources.CommitSink.readCommitted(spark, morPath).count() == 1050L)
-  }
-
-  test("mor row-level ops: a json-payload table falls back to copy-on-write") {
-    // r14 lifted the partitioned-table exclusion (Round14Spec pins the
-    // delta path's layout preservation); the payload gate remains — json
-    // lines have no stable physical positions for a vector to name
-    val (cat, root) = withCatalog("mor_json_cow")
-    val path = s"$root/default/t"
-    spark.range(100L).select($"id", ($"id" * 1.0).as("v"))
-      .write.format("graft-commit").option("path", path)
-      .option("payload", "json").mode("overwrite").save()
-    withRowLevelMode("merge-on-read") {
-      spark.sql(s"UPDATE $cat.`default`.t SET v = -1.0 WHERE id = 7")
-    }
-    val m = manifest(path)
-    assert(m.deletes.isEmpty,
-      "json payload: no vectors — the COW path rewrites instead")
-    val back = sources.CommitSink.readCommitted(spark, path)
-    assert(back.filter($"v" === -1.0).count() == 1L && back.count() == 100L)
   }
 
   test("dv format: dense vectors switch to the bitmap container, sparse stay positional") {
@@ -826,23 +796,6 @@ class Round13Spec extends AnyFunSuite {
     assert(m.group(2).toInt == 16, desc)
     assert(m.group(1).toInt <= 4,
       s"a 1/64 box over a z-clustered layout must prune most files: $desc")
-  }
-
-  test("payload: an un-optioned INSERT OVERWRITE keeps a json table json") {
-    val (cat, root) = withCatalog("payload_pin")
-    spark.sql(s"CREATE TABLE $cat.`default`.t (id BIGINT) USING `graft-commit` " +
-      "TBLPROPERTIES ('payload'='json')")
-    val path = s"$root/default/t"
-    assert(manifest(path).payload == "json")
-    spark.sql(s"INSERT OVERWRITE $cat.`default`.t SELECT id FROM range(5)")
-    assert(manifest(path).payload == "json",
-      "the TBLPROPERTIES choice must survive an un-optioned overwrite")
-    assert(manifest(path).files.forall(_.endsWith(".json")))
-    assert(sources.CommitSink.readCommitted(spark, path).count() == 5L)
-    // an EXPLICIT truncate option still switches
-    spark.range(3L).select($"id").write.format("graft-commit")
-      .option("path", path).option("payload", "parquet").mode("overwrite").save()
-    assert(manifest(path).payload == "parquet")
   }
 
   // --- o29: change data feed ------------------------------------------------

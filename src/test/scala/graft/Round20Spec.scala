@@ -64,7 +64,7 @@ class Round20Spec extends AnyFunSuite {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
     df.write.format("graft-commit").option("path", dir)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     val back = spark.read.format("graft-commit").option("path", dir).load()
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
       schema.fields.map(f => (f.name, f.dataType)).toSeq)
@@ -82,7 +82,7 @@ class Round20Spec extends AnyFunSuite {
     spark.range(100).selectExpr("id", "id % 7 AS k",
       "CAST(id AS STRING) AS tag")
       .write.format("graft-commit").option("path", dir)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     // a copy-on-write DELETE routes through ReplaceData with the
     // prepended __row_operation marker — the fieldOffset=1 branch of
     // the new write support

@@ -488,7 +488,7 @@ class Round7Spec extends AnyFunSuite {
   // --- minhash_sig hardening --------------------------------------------
 
   test("minhash_sig: non-literal and non-integral k/p raise clear errors; nulls are skipped") {
-    graft.functions.MinHash.register(spark)
+    graft.functions.SqlFunctions.setup(spark)
     val df = Seq((1L, Seq("a b c", "b c d"))).toDF("doc_id", "shingles")
     df.createOrReplaceTempView("mh_in")
     val e1 = intercept[Exception] {

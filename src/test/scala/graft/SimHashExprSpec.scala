@@ -62,7 +62,7 @@ class SimHashExprSpec extends AnyFunSuite {
   }
 
   test("builder rejects non-literal and non-integral bits/p with clear errors") {
-    SimHash.register(spark)
+    graft.functions.SqlFunctions.setup(spark)
     val df = Seq((1L, Seq("a b c"))).toDF("doc_id", "shingles")
     df.createOrReplaceTempView("sh_in")
     val e1 = intercept[Exception] {

@@ -33,7 +33,7 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("vec_dot registered for SQL and matches Column API") {
-    VectorExpressions.register(spark)
+    graft.functions.SqlFunctions.setup(spark)
     Tables.embeddings(spark, sf0001).createOrReplaceTempView("emb_sql")
     val viaSql = spark.sql(
       "SELECT vec_id, vec_dot(embedding, embedding) AS d FROM emb_sql")
@@ -75,6 +75,33 @@ class VectorExprSpec extends AnyFunSuite {
         VectorExpressions.vecL2($"embedding", $"qe").as("fast"))
       .filter($"spec" =!= $"fast")
     assert(diff.count() == 0, "vec_l2sq must replay the fold bit-for-bit")
+  }
+
+  test("Column APIs resolve on a newSession() frame while spark is active") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import graft.ext.Dedup
+    import graft.functions.{MinHash, SimHash}
+    // every Column API on one frame of `s`: the frame's session, not the
+    // active one, must be the only session its analysis consults
+    def frame(s: SparkSession): DataFrame =
+      s.range(4).selectExpr("id",
+          "array(cast(id AS float), 1.0f) AS a",
+          "array(2.0f, cast(id AS float)) AS b",
+          "array(concat('x y ', id), 'y z w') AS sh")
+        .select(col("id"),
+          VectorExpressions.vecDot(col("a"), col("b")).as("dot"),
+          VectorExpressions.vecCos(col("a"), col("b")).as("cos"),
+          VectorExpressions.vecL2(col("a"), col("b")).as("l2"),
+          MinHash.minhashSig(col("sh"), Dedup.K, Dedup.P).as("mh"),
+          SimHash.simhashSig(col("sh"), Dedup.SimBits, Dedup.P).as("simh"))
+    val other = spark.newSession()
+    SparkSession.setActiveSession(spark)
+    val theirs = frame(other)
+    val ours = frame(spark)
+    assert(SparkSession.active eq spark)
+    assert(theirs.queryExecution.optimizedPlan.canonicalized ==
+      ours.queryExecution.optimizedPlan.canonicalized)
+    assert(theirs.collect().toSeq == ours.collect().toSeq)
   }
 
   test("codegen path is no slower than the fold (smoke timing)") {
